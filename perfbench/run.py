@@ -26,8 +26,10 @@ prints its end-to-end figures beside those of the last untraced run of the
 workload in this checkout, which is the tracing overhead.
 
 The base corpus is read from $PERFBENCH_TESTDATA (default
-/root/testdata/sf0.1). Everything else is written under perfbench/.cache
-and perfbench/.runs in the checkout.
+~/testdata/sf0.1) and Spark's jars from $SPARK_HOME/jars ($SPARK_HOME
+defaults to the installation that provides spark-submit on the PATH).
+Everything else is written under perfbench/.cache and perfbench/.runs in
+the checkout.
 """
 import argparse
 import csv
@@ -50,7 +52,7 @@ import metrics  # noqa: E402
 CACHE = os.path.join(BENCH, ".cache")
 RUNS = os.path.join(BENCH, ".runs")
 PROGRAM_SRC = os.path.join(ROOT, "src", "main", "scala")
-TESTDATA = os.environ.get("PERFBENCH_TESTDATA", "/root/testdata/sf0.1")
+TESTDATA = os.environ.get("PERFBENCH_TESTDATA", os.path.expanduser("~/testdata/sf0.1"))
 WORKLOADS = ("medallion_incremental", "analyst_scan_10x", "serve_ivf_mixed")
 # the operations whose latency is the workload's op latency; the others
 # (serve's appends and maintenance) are attempted and checked but timed apart
@@ -63,8 +65,8 @@ ITEM_NAME = {"medallion_incremental": "ingest_rows_per_s",
              "analyst_scan_10x": "queries_per_s",
              "serve_ivf_mixed": "probes_per_s"}
 JVM_TIMEOUT_S = 160
-SBT_OPTS = ("-Dsbt.override.build.repos=true -Dsbt.repository.config=/root/.sbt/repositories "
-            "-Dsbt.offline=true -Xmx2g")
+SBT_OPTS = ("-Dsbt.override.build.repos=true -Dsbt.offline=true -Xmx2g "
+            f"-Dsbt.repository.config={os.path.expanduser('~/.sbt/repositories')}")
 ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
     "java.util", "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch",
@@ -108,6 +110,11 @@ def build():
         fail(f"program sources not found under {PROGRAM_SRC}")
     if shutil.which("sbt") is None or shutil.which("java") is None:
         fail("sbt and java are required")
+    spark_home = os.environ.get("SPARK_HOME") or (
+        shutil.which("spark-submit") and
+        os.path.dirname(os.path.dirname(os.path.realpath(shutil.which("spark-submit")))))
+    if not spark_home or not os.path.isdir(os.path.join(spark_home, "jars")):
+        fail("Spark not found: set SPARK_HOME or put spark-submit on the PATH")
     os.makedirs(CACHE, exist_ok=True)
     fp = fingerprint(PROGRAM_SRC, os.path.join(BENCH, "src", "main", "scala"),
                      files=[os.path.join(BENCH, "build.sbt"),
@@ -118,7 +125,7 @@ def build():
             st = json.load(f)
         if st["fingerprint"] == fp:
             return st["classpath"]
-    env = dict(os.environ, COURSIER_MODE="offline")
+    env = dict(os.environ, COURSIER_MODE="offline", SPARK_HOME=spark_home)
     env.setdefault("SBT_OPTS", SBT_OPTS)
     log_path = os.path.join(CACHE, "build.log")
     with open(log_path, "w") as log:

@@ -3,7 +3,7 @@
     python3 -m unittest discover -s perfbench -p 'test_*.py'
 
 The input-determinism test reads $PERFBENCH_TESTDATA (default
-/root/testdata/sf0.1) and is skipped when it is absent.
+~/testdata/sf0.1) and is skipped when it is absent.
 """
 import filecmp
 import os
@@ -14,7 +14,7 @@ import gen
 import metrics
 import run
 
-TESTDATA = os.environ.get("PERFBENCH_TESTDATA", "/root/testdata/sf0.1")
+TESTDATA = run.TESTDATA
 
 
 def tree(d):
