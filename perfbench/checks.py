@@ -58,19 +58,20 @@ def _norm(df):
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
-def compare(got_path, want, subset_col=None):
+def compare(got_path, want, subset_col=None, asked=None):
     """Compare the program's output with an oracle frame. Returns (ok, detail).
 
     With `subset_col`, the oracle is narrowed to the keys the program was
-    asked for (a probe batch answers some of the oracle's query vectors).
+    `asked` for (a probe batch answers some of the oracle's query vectors),
+    so a key the program drops is a missing row. An empty output fails.
     Floats must agree within 1e-9; everything else exactly.
     """
     got = read(got_path)
-    if got is None:
+    if got is None or got.empty:
         return False, "no output"
     if subset_col:
         got = got.drop_duplicates()
-        want = want[want[subset_col].isin(set(got[subset_col]))]
+        want = want[want[subset_col].isin(set(asked or ()))]
     g, w = _norm(got.copy()), _norm(want.copy())
     if list(g.columns) != list(w.columns):
         return False, f"columns {list(g.columns)} vs {list(w.columns)}"

@@ -14,7 +14,7 @@ import graft.ops.IvfIndex
   * in set-up over the base corpus's embeddings. The loop runs rounds of
   * [[Serve.Round]]: probe batches of [[Serve.BatchSize]] seeded query
   * vectors through the exact rescore, the PQ path and a label-filtered
-  * probe, the hybrid lexical + ANN query, an append of the next vectors
+  * probe, the hybrid lexical + ANN query, appends of the next vectors
   * of replica 1 of a factor-2 corpus (`inputs`) and index maintenance.
   * A round in progress is finished when the window closes, so every run
   * has the same operation mix. */
@@ -35,7 +35,7 @@ final class Serve(ctx: Ctx) extends Workload {
   private var pending: Iterator[Long] = Iterator.empty
 
   /** Results of the warm-up probes, per kind, for the oracle checks. */
-  private val warmResults = mutable.Map.empty[String, (Array[Row], StructType)]
+  private val warmResults = mutable.Map.empty[String, Probe]
   private var rescored = 0L
   private var returned = 0L
 
@@ -64,8 +64,8 @@ final class Serve(ctx: Ctx) extends Workload {
         (floor(col("col.score") * 1000000) / 1000000.0).as("score"),
         (col("pos") + 1).cast("long").as("rn"))
 
-  /** One probe batch of `kind`; returns the result rows and schema. */
-  private def probe(kind: String, loop: Option[Loop]): (Array[Row], StructType) = kind match {
+  /** One probe batch of `kind`. */
+  private def probe(kind: String): Probe = kind match {
     case "hybrid" =>
       ctx.span("ops.ivf_probe") {
         val df = ctx.span("queries.plan") {
@@ -73,7 +73,7 @@ final class Serve(ctx: Ctx) extends Workload {
           d.queryExecution.executedPlan
           d
         }
-        (ctx.span("queries.exec")(df.collect()), df.schema)
+        Probe(ctx.span("queries.exec")(df.collect()), df.schema, Nil, None)
       }
     case _ =>
       val filtered = kind == "probe_filtered"
@@ -86,12 +86,7 @@ final class Serve(ctx: Ctx) extends Workload {
           case "probe_filtered" => IvfIndex.probeCandidates(spark, root, q, candWhere = Some("label = 1"))
         }
         val top = top5(cands)
-        val rows = top.collect()
-        if (ctx.tracer.enabled && kind != "probe_pq") loop.foreach(_.untimed {
-          rescored += cands.count()
-          returned += rows.length
-        })
-        (rows, top.schema)
+        Probe(top.collect(), top.schema, ids, if (kind == "probe_pq") None else Some(cands))
       }
   }
 
@@ -109,7 +104,7 @@ final class Serve(ctx: Ctx) extends Workload {
     * oracles, then an append and a maintenance pass. */
   def setup(): Unit = {
     IvfIndex.build(spark, ctx.testdata, root)
-    Kinds.foreach(kind => warmResults(kind) = probe(kind, None))
+    Kinds.foreach(kind => warmResults(kind) = probe(kind))
     append()
     IvfIndex.maintain(spark, root)
   }
@@ -125,16 +120,29 @@ final class Serve(ctx: Ctx) extends Workload {
       case "append" => loop.timed(kind)(append())
       case "maintain" =>
         loop.timed(kind)(ctx.span("ops.ivf_maintain") { IvfIndex.maintain(spark, root); 0L })
-      case _ => loop.timed(kind)(probe(kind, Some(loop))._1.map(_.getLong(0)).distinct.length.toLong)
+      case _ =>
+        var p: Option[Probe] = None
+        loop.timed(kind) {
+          p = Some(probe(kind))
+          p.get.rows.map(_.getLong(0)).distinct.length.toLong
+        }
+        // trace-only count for ops.ivf_probe.rescored_per_result, made
+        // after the span and the operation have closed so that no layer
+        // and no latency sample carries it
+        if (ctx.tracer.enabled) p.foreach(r => r.cands.foreach(c => loop.untimed {
+          rescored += c.count()
+          returned += r.rows.length
+        }))
     }
   }
 
   def finish(loop: Loop): Outcome = {
-    val oracle = warmResults.toSeq.map { case (kind, (rows, schema)) =>
+    // a probe's oracle rows are those of the query vectors it was asked for
+    val oracle = warmResults.toSeq.map { case (kind, p) =>
       val got = s"${ctx.out}/serve_$kind"
-      spark.createDataFrame(rows.toSeq.asJava, schema).write.parquet(got)
+      spark.createDataFrame(p.rows.toSeq.asJava, p.schema).write.parquet(got)
       Map("name" -> OracleOf(kind), "got" -> got,
-        "subset" -> (if (kind == "hybrid") "" else "q_id"))
+        "subset" -> (if (kind == "hybrid") "" else "q_id"), "asked" -> p.ids.mkString(","))
     }
     // recall@5 of the final index against exact brute force over the
     // vectors it holds now, for every query vector
@@ -166,14 +174,10 @@ object Serve {
   val BatchSize = 32
   val AppendSize = 64
   val Kinds = Seq("probe_exact", "probe_pq", "probe_filtered", "hybrid")
-  /** Seven latency samples per round. The probe kinds differ in cost
-    * (filtered ≈ exact < PQ < hybrid), and with few samples the median of a
-    * mixture jumps between kinds from run to run. With three exact probes
-    * and one filtered probe below two PQ probes and the hybrid, the median
-    * is the slowest of the four cheap probes. The first probe after a write
-    * to the index is slower, so a PQ probe opens the round. */
-  val Round: Seq[String] = Seq("probe_pq", "probe_exact", "probe_filtered", "probe_exact",
-    "probe_pq", "probe_exact", "hybrid", "append", "maintain")
+  /** One probe of each kind in turn, an append after every second probe
+    * and a maintenance pass after every fourth. */
+  val Round: Seq[String] = Seq("probe_exact", "probe_pq", "append", "probe_filtered", "hybrid",
+    "append", "maintain")
   val OracleOf = Map("probe_exact" -> "e14_ann_ivf_persisted",
     "probe_pq" -> "e16_ann_ivfpq_persisted", "probe_filtered" -> "e18_ann_ivf_filtered",
     "hybrid" -> "t30_hybrid_ann_rrf")
@@ -181,4 +185,9 @@ object Serve {
   val Replica = 1000000000001L
   val RecallFloorExact = 0.45
   val RecallFloorPq = 0.4
+
+  /** A probe's result, the query vectors it was asked for (none for the
+    * hybrid query) and, for the rescoring probes, its candidate rows. */
+  final case class Probe(rows: Array[Row], schema: StructType, ids: Seq[Long],
+      cands: Option[DataFrame])
 }

@@ -81,7 +81,7 @@ object Tracer {
 final class JobListener extends SparkListener {
   import JobListener.Job
   private final class StageSums(val span: Int) {
-    var tasks = 0L; var cpuNs = 0L; var runMs = 0L; var gcMs = 0L
+    var tasks = 0L; var cpuNs = 0L; var runMs = 0L
     var shuffleWriteBytes = 0L; var outputBytes = 0L
   }
   private val jobs = mutable.LinkedHashMap.empty[Int, Job]
@@ -107,7 +107,6 @@ final class JobListener extends SparkListener {
       s.tasks += 1
       s.cpuNs += m.executorCpuTime
       s.runMs += m.executorRunTime
-      s.gcMs += m.jvmGCTime
       s.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
       s.outputBytes += m.outputMetrics.bytesWritten
     }
@@ -135,9 +134,9 @@ final class JobListener extends SparkListener {
     } finally j.close()
     val s = new PrintWriter(stagesPath)
     try {
-      s.println("stage,span,tasks,cpu_ns,run_ms,gc_ms,shuffle_write_bytes,output_bytes")
+      s.println("stage,span,tasks,cpu_ns,run_ms,shuffle_write_bytes,output_bytes")
       stages.foreach { case (id, x) => s.println(
-        s"$id,${x.span},${x.tasks},${x.cpuNs},${x.runMs},${x.gcMs},${x.shuffleWriteBytes},${x.outputBytes}") }
+        s"$id,${x.span},${x.tasks},${x.cpuNs},${x.runMs},${x.shuffleWriteBytes},${x.outputBytes}") }
     } finally s.close()
   }
 }

@@ -10,6 +10,9 @@ import os
 import tempfile
 import unittest
 
+import pandas as pd
+
+import checks
 import gen
 import metrics
 import run
@@ -68,14 +71,49 @@ class FailedOperations(unittest.TestCase):
         ops = [dict(kind="probe_exact", dur_ns=str(d), ok="1", items="32")
                for d in (2_000_000_000, 3_000_000_000)]
         ops.append(dict(kind="probe_pq", dur_ns="1000", ok="0", items="0"))
+        ops.append(dict(kind="append", dur_ns="500000000", ok="1", items="64"))
         e2e, info = run.end_to_end("serve_ivf_mixed", res, ops)
         self.assertAlmostEqual(e2e["op_p50_s"][0], 2.5)
         self.assertEqual(info["samples"], 2)
+        # appended vectors are not query vectors answered
         self.assertAlmostEqual(e2e["items_per_s"][0], 6.4)
+        self.assertAlmostEqual(e2e["write_p50_s"][0], 0.5)
         self.assertAlmostEqual(e2e["setup_s"][0], 5.0)
         named = run.workload_named("serve_ivf_mixed", e2e, info, res, ops)
-        self.assertAlmostEqual(named["failed_ratio"][0], 1 / 3)
+        self.assertAlmostEqual(named["failed_ratio"][0], 1 / 4)
         self.assertEqual(named["peak_rss_mb"][0], 100.0)
+
+    def test_a_run_whose_writes_all_failed_has_no_result(self):
+        res = {"session_s": 1.0, "setup_s": 4.0, "busy_s": 10.0}
+        ops = [dict(kind="probe_exact", dur_ns="2000", ok="1", items="32"),
+               dict(kind="append", dur_ns="1000", ok="0", items="0")]
+        self.assertEqual(run.end_to_end("serve_ivf_mixed", res, ops), (None, {}))
+
+
+class OracleSubset(unittest.TestCase):
+    """A probe is compared with the oracle rows of the query vectors it
+    was asked for, so a query it drops is a missing row."""
+    WANT = pd.DataFrame({"q_id": [1, 1, 2, 3], "vec_id": [10, 11, 20, 30],
+                         "score": [0.5, 0.4, 0.3, 0.2], "rn": [1, 2, 1, 1]})
+
+    def compare(self, got, asked):
+        with tempfile.TemporaryDirectory() as t:
+            os.makedirs(os.path.join(t, "got"))
+            got.to_parquet(os.path.join(t, "got", "part-0.parquet"))
+            return checks.compare(os.path.join(t, "got"), self.WANT, "q_id", asked)
+
+    def test_the_asked_queries_match(self):
+        ok, _ = self.compare(self.WANT[self.WANT.q_id.isin([1, 2])], [1, 2])
+        self.assertTrue(ok)
+
+    def test_a_dropped_query_fails(self):
+        ok, detail = self.compare(self.WANT[self.WANT.q_id == 1], [1, 2])
+        self.assertFalse(ok)
+        self.assertIn("rows 2 vs oracle 3", detail)
+
+    def test_an_empty_result_fails(self):
+        ok, detail = self.compare(self.WANT.iloc[0:0], [1, 2])
+        self.assertEqual((ok, detail), (False, "no output"))
 
 
 class Attribution(unittest.TestCase):
